@@ -152,15 +152,6 @@ def spark_simhash(col: str) -> str:
     return _spark_simhash_of_token_hashes(th)
 
 
-def spark_simhash_from_tokens(tok_col: str) -> str:
-    """SimHash over a *materialized* token-array column (hot-path form:
-    avoids re-tokenizing inside the lambda)."""
-    th = (
-        f"transform(array_distinct({tok_col}), t -> {spark_str_hash_raw('t')})"
-    )
-    return _spark_simhash_of_token_hashes(th)
-
-
 # ----------------------------------------------------------- DuckDB side
 
 

@@ -41,7 +41,6 @@ def signature_frame(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
     """The one-pass signature derivation (lazy; no caching).
 
@@ -50,113 +49,94 @@ def signature_frame(
     spreads the CPU-heavy work across cores when the corpus arrives in
     few splits (a compact parquet file is one partition).
 
-    ``impl="arrow"`` (default) computes the whole derivation in an
-    Arrow-batched kernel: one ``hashlib.md5`` call per shingle/token
-    plus vectorized numpy min-hash/bit-count — the interpreted
-    higher-order expressions of the SQL form are the measured hot spot
-    of the signature build (sf1: 16.9 s → ~4 s).  ``impl="sql"`` is
-    the pure built-in-expression form; both produce bit-identical
-    rows (pinned in tests — same tokenization, same md5-prefix hash,
-    same first-occurrence dedup order, same null conventions).
+    The whole derivation runs in an Arrow-batched kernel: one
+    ``hashlib.md5`` call per shingle/token plus vectorized numpy
+    min-hash/bit-count — the interpreted higher-order expressions it
+    replaced were the measured hot spot of the signature build (sf1:
+    16.9 s → ~4 s).  Values equal the :mod:`..functions.texthash`
+    expressions (same tokenization, md5-prefix hash, first-occurrence
+    dedup order and null conventions), so DuckDB oracles and the
+    streaming deduper hash-match it.
     """
     par = docs.sparkSession.sparkContext.defaultParallelism
     base = docs.select(F.col(id_col), F.col(text_col)).repartition(
         par, F.col(id_col)
     )
-    if impl == "arrow":
-        # capture plain values: the closure is pickled to executor
-        # workers that may not have this package importable.
-        P, A, B, W, BITS = TH.P, list(TH.A), list(TH.B), TH.SHINGLE_W, TH.SIMHASH_BITS
+    # capture plain values: the closure is pickled to executor
+    # workers that may not have this package importable.
+    P, A, B, W, BITS = TH.P, list(TH.A), list(TH.B), TH.SHINGLE_W, TH.SIMHASH_BITS
 
-        def _batches(it):
-            import hashlib
+    def _batches(it):
+        import hashlib
 
-            import numpy as np
-            import pandas as pd
+        import numpy as np
+        import pandas as pd
 
-            a_arr = np.array(A, dtype="int64")[:, None]
-            b_arr = np.array(B, dtype="int64")[:, None]
-            js = np.arange(BITS, dtype="int64")
-            pw = 1 << (BITS - 1 - js)  # bit j → weight 2^(BITS-1-j)
+        a_arr = np.array(A, dtype="int64")[:, None]
+        b_arr = np.array(B, dtype="int64")[:, None]
+        js = np.arange(BITS, dtype="int64")
+        pw = 1 << (BITS - 1 - js)  # bit j → weight 2^(BITS-1-j)
 
-            def h60(s):
-                return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+        def h60(s):
+            return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
-            for pdf in it:
-                ids, hss, sigs, sims = [], [], [], []
-                for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                    if text is None or not isinstance(text, str):
-                        # NULL text → NULL hs/sig but sim = 0, matching
-                        # the SQL form's null propagation exactly (the
-                        # outer bit-fold starts from acc=0L and the SQL
-                        # aggregate keeps the non-null accumulator).
-                        ids.append(doc_id)
-                        hss.append(None)
-                        sigs.append(None)
-                        sims.append(0)
-                        continue
-                    toks = [t for t in text.split(" ") if t]
-                    # distinct shingles, first-occurrence order
-                    sh = list(
-                        dict.fromkeys(
-                            " ".join(toks[i : i + W])
-                            for i in range(len(toks) - W + 1)
-                        )
-                    )
-                    hs = list(dict.fromkeys(h60(s) % P for s in sh))
-                    if hs:
-                        h = np.array(hs, dtype="int64")[None, :]
-                        sig = ((a_arr * h + b_arr) % P).min(axis=1).tolist()
-                    else:
-                        sig = None
-                    th = np.array(
-                        [h60(t) for t in dict.fromkeys(toks)], dtype="int64"
-                    )
-                    if len(th):
-                        ones = ((th[:, None] >> js[None, :]) & 1).sum(axis=0)
-                        bits = (2 * ones > len(th)).astype("int64")
-                        sim = int((bits * pw).sum())
-                    else:
-                        sim = 0
+        for pdf in it:
+            ids, hss, sigs, sims = [], [], [], []
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                if text is None or not isinstance(text, str):
+                    # NULL text → NULL hs/sig but sim = 0, matching
+                    # the texthash expressions' null propagation (the
+                    # outer bit-fold starts from acc=0L and the SQL
+                    # aggregate keeps the non-null accumulator).
                     ids.append(doc_id)
-                    hss.append(hs)
-                    sigs.append(sig)
-                    sims.append(sim)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "hs": hss,
-                        "sig": sigs,
-                        # nullable Int64, NOT a plain int column: one
-                        # None in the batch would coerce to float64 and
-                        # round 60-bit SimHash values (observed: low
-                        # bits flipped only in batches containing a
-                        # null-text row).
-                        "sim": pd.array(sims, dtype="Int64"),
-                    }
+                    hss.append(None)
+                    sigs.append(None)
+                    sims.append(0)
+                    continue
+                toks = [t for t in text.split(" ") if t]
+                # distinct shingles, first-occurrence order
+                sh = list(
+                    dict.fromkeys(
+                        " ".join(toks[i : i + W])
+                        for i in range(len(toks) - W + 1)
+                    )
                 )
+                hs = list(dict.fromkeys(h60(s) % P for s in sh))
+                if hs:
+                    h = np.array(hs, dtype="int64")[None, :]
+                    sig = ((a_arr * h + b_arr) % P).min(axis=1).tolist()
+                else:
+                    sig = None
+                th = np.array(
+                    [h60(t) for t in dict.fromkeys(toks)], dtype="int64"
+                )
+                if len(th):
+                    ones = ((th[:, None] >> js[None, :]) & 1).sum(axis=0)
+                    bits = (2 * ones > len(th)).astype("int64")
+                    sim = int((bits * pw).sum())
+                else:
+                    sim = 0
+                ids.append(doc_id)
+                hss.append(hs)
+                sigs.append(sig)
+                sims.append(sim)
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "hs": hss,
+                    "sig": sigs,
+                    # nullable Int64, NOT a plain int column: one
+                    # None in the batch would coerce to float64 and
+                    # round 60-bit SimHash values (observed: low
+                    # bits flipped only in batches containing a
+                    # null-text row).
+                    "sim": pd.array(sims, dtype="Int64"),
+                }
+            )
 
-        return base.mapInPandas(
-            _batches,
-            f"{id_col} bigint, hs array<bigint>, sig array<bigint>, sim bigint",
-        )
-    if impl != "sql":
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
-    return (
-        base.withColumn("toks", F.expr(TH.spark_tokens(text_col)))
-        .withColumn("sh", F.expr(TH.spark_shingles_from_tokens("toks")))
-        .withColumn(
-            "hs",
-            F.expr(
-                f"array_distinct(transform(sh, s -> {TH.spark_str_hash('s')}))"
-            ),
-        )
-        .withColumn(
-            "sig",
-            F.when(F.size("hs") > 0, F.expr(TH.spark_minhash_sig("hs"))),
-        )
-        .withColumn("sim", F.expr(TH.spark_simhash_from_tokens("toks")))
-        .select(id_col, "hs", "sig", "sim")
+    return base.mapInPandas(
+        _batches,
+        f"{id_col} bigint, hs array<bigint>, sig array<bigint>, sim bigint",
     )
 
 

@@ -101,7 +101,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector (self excluded).
 
@@ -110,17 +109,13 @@ def brute_force_topk(
     products with zero shuffle of the corpus.  Bounded |Q| is the
     contract (this is the truth leg of the ANN tiers).
 
-    ``impl="arrow"`` (default): the (small, per the contract) scaled
-    query set is pulled to the driver — |Q|×(d+1) ints, the bounded
-    model-pull posture — and each corpus Arrow batch is scored as one
-    int64 matmul with a batch-local exact top-k per query
-    ((cos desc, neighbor_id) order, self excluded), so the window
-    stage ranks ≤ |Q|·k rows per batch instead of the full |Q|·|C|
-    fan-out.  ``impl="sql"`` is the pure built-in broadcast-join
-    form; bit-identical (pinned in tests).
+    The (small, per the contract) scaled query set is pulled to the
+    driver — |Q|×(d+1) ints, the bounded model-pull posture — and each
+    corpus Arrow batch is scored as one int64 matmul with a
+    batch-local exact top-k per query ((cos desc, neighbor_id) order,
+    self excluded), so the window stage ranks ≤ |Q|·k rows per batch
+    instead of the full |Q|·|C| fan-out.
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     # NOTE: no degenerate-scan spread here — "zero shuffle of the
     # corpus" is this operator's pinned scale contract
     # (tests/test_plans.py::test_similarity_corpus_not_shuffled), and
@@ -130,18 +125,7 @@ def brute_force_topk(
     q = _scaled(queries, id_col, vec_col, "q")
     c = _scaled(corpus, id_col, vec_col, "c")
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    if impl == "arrow":
-        pairs = _bounded_q_topk_arrow(q, c, k, metric="cosine")
-    else:
-        cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-        pairs = (
-            c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("cos_sim"),
-            )
-        )
+    pairs = _bounded_q_topk_arrow(q, c, k, metric="cosine")
     return (
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
@@ -158,9 +142,8 @@ def _bounded_q_topk_arrow(
     query under the exact (score desc, neighbor_id) order with self
     excluded — the union of batch-local top-k lists always contains
     the global top-k (a global winner ranks ≤ k within its own
-    batch), so the downstream window reproduces the SQL form
-    bit-for-bit.  ``metric``: 'cosine' (dot/(√n·√n)) or 'ip'
-    (dot/SCALE²)."""
+    batch), so the downstream window yields the exact global top-k.
+    ``metric``: 'cosine' (dot/(√n·√n)) or 'ip' (dot/SCALE²)."""
     rows = q.collect()
     import numpy as np
 
@@ -292,36 +275,10 @@ def _warn_candidate_mass(n_rows: int, n_planes: int, n_bands: int) -> None:
         )
 
 
-def _sign_key(band: int, n_planes: int = LSH_PLANES) -> F.Column:
-    """Sign pattern of the band's ``n_planes`` hyperplanes, packed into a
-    bigint. Plane coefficients come from :func:`_plane_coef` — a fixed
-    quadratically-mixed integer vector, identical in every engine/run.
-    Operates on the scaled-vector column ``v``."""
-    bits = []
-    for pl in range(n_planes):
-        p_idx = band * n_planes + pl
-        # The plane coefficients are compile-time constants — emit them
-        # as an array literal. The earlier transform(sequence(...))
-        # form rebuilt the plane and ran an extra interpreted lambda
-        # per plane per row (HOFs don't codegen); fully unrolling the
-        # dot into element_at chains went the other way (an expression
-        # tree too large to codegen: 8.6 MiB task binaries, 8× slower).
-        # The literal array + one zip_with/aggregate pair is the
-        # balance point.
-        coeffs = ", ".join(
-            f"{_plane_coef(p_idx, j)}L" for j in range(DIM)
-        )
-        dot = V.spark_dot("v", f"array({coeffs})")
-        bits.append(f"(CASE WHEN {dot} > 0 THEN 1L ELSE 0L END)")
-    key = "0L"
-    for b_expr in bits:
-        key = f"({key} * 2 + {b_expr})"
-    return F.expr(key)
-
-
 def _plane_matrix(n_total: int = LSH_PLANES * LSH_BANDS):
     """The (DIM × ``n_total``) hyperplane coefficient matrix — the same
-    fixed pseudo-random integers :func:`_sign_key` inlines."""
+    fixed pseudo-random integers the DuckDB oracles generate from
+    :data:`_PLANE_COEF_SQL`."""
     import numpy as np
 
     return np.array(
@@ -604,7 +561,6 @@ def _banded(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
-    impl: str = "arrow",
     n_planes: int = LSH_PLANES,
     n_bands: int = LSH_BANDS,
 ) -> DataFrame:
@@ -621,108 +577,67 @@ def _banded(
     cos ≥ 0.9 at ~1/4000 of the pair space.  Rule of thumb:
     n_planes ≈ log2(corpus / target_bucket_occupancy).
 
-    ``impl="arrow"`` computes all 48 plane dots per vector as one numpy
-    int64 matmul inside ``mapInPandas`` (the dense-kernel pandas-UDF
-    case — the interpreted ``zip_with``/``aggregate`` chain in the SQL
-    form is the measured hot spot of the ANN tier); ``impl="sql"`` is
-    the pure built-in-expression fallback.  Both derive from the same
-    engine-exact integer scaling, so keys, norms, and scaled vectors
-    are bit-identical (pinned in tests).
+    All plane dots per vector run as one numpy int64 matmul inside
+    ``mapInPandas`` (the dense-kernel pandas-UDF case — the interpreted
+    ``zip_with``/``aggregate`` chain it replaced was the measured hot
+    spot of the ANN tier), over the same engine-exact integer scaling
+    the DuckDB oracles use.
 
-    Corpus contract (ENFORCED in both impls): every vector non-null
-    and exactly DIM wide.  Outside that contract the two impls would
-    diverge — Spark ``zip_with`` null-pads a short vector so the SQL
-    plane dot goes NULL (key 0), while the numpy matmul would compute
-    a real prefix dot; and ``np.stack`` can't batch ragged widths.
-    Rather than replicate the SQL null conventions in the kernel, the
-    contract is asserted so violations fail loudly in either impl.
+    Corpus contract (ENFORCED): every vector non-null and exactly DIM
+    wide — ``np.stack`` can't batch ragged widths, and a short vector
+    would otherwise yield a silent prefix dot.
     """
-    if impl == "arrow":
-        planes = _plane_matrix(n_planes * n_bands)
-        scale = V.SCALE
+    planes = _plane_matrix(n_planes * n_bands)
+    scale = V.SCALE
 
-        # NOTE: self-contained closure — pickled to executor workers
-        # that may not have this package importable (the verification
-        # driver launches from an arbitrary cwd); captured arrays and
-        # scalars pickle by value, module references would not.
-        def _batches(it):
-            import numpy as np
-            import pandas as pd
+    # NOTE: self-contained closure — pickled to executor workers
+    # that may not have this package importable (the verification
+    # driver launches from an arbitrary cwd); captured arrays and
+    # scalars pickle by value, module references would not.
+    def _batches(it):
+        import numpy as np
+        import pandas as pd
 
-            for pdf in it:
-                if pdf[vec_col].isna().any():
-                    raise ValueError(
-                        "_banded corpus contract violated: null embedding "
-                        "(vectors must be non-null, width DIM)"
-                    )
-                if not len(pdf):
-                    continue
-                m = np.stack(pdf[vec_col].map(lambda a: np.asarray(a, dtype="float64")))
-                if m.shape[1] != planes.shape[0]:
-                    raise ValueError(
-                        f"_banded corpus contract violated: vector width "
-                        f"{m.shape[1]} != DIM {planes.shape[0]}"
-                    )
-                # engine-exact round(x·SCALE) — see vectors.py::np_scaled
-                v = m * scale
-                fv, cv = np.floor(v), np.ceil(v)
-                q = np.where(
-                    v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)
-                ).astype("int64")
-                n = (q * q).sum(axis=1)
-                bits = (q @ planes) > 0
-                keys = np.zeros((len(q), n_bands), dtype="int64")
-                for b in range(n_bands):
-                    for pl in range(n_planes):
-                        keys[:, b] = keys[:, b] * 2 + bits[:, b * n_planes + pl]
-                n_rows = len(q) * n_bands
-                yield pd.DataFrame(
-                    {
-                        "id": np.repeat(pdf[id_col].to_numpy(), n_bands),
-                        "v": [row.tolist() for row in q for _ in range(n_bands)],
-                        "n": np.repeat(n, n_bands),
-                        "band": np.tile(np.arange(n_bands, dtype="int32"), len(q)),
-                        "key": keys.reshape(n_rows),
-                    }
+        for pdf in it:
+            if pdf[vec_col].isna().any():
+                raise ValueError(
+                    "_banded corpus contract violated: null embedding "
+                    "(vectors must be non-null, width DIM)"
                 )
-
-        return vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _batches, "id long, v array<bigint>, n bigint, band int, key bigint"
-        )
-    if impl != "sql":
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
-    # Same corpus contract as the arrow kernel, enforced inside the
-    # expression that feeds every downstream use (a separate dropped
-    # assert column would be pruned by Catalyst and never evaluate).
-    checked = (
-        f"CASE WHEN {vec_col} IS NOT NULL AND size({vec_col}) = {DIM} "
-        f"THEN {vec_col} ELSE raise_error("
-        f"'_banded corpus contract violated: vectors must be non-null, "
-        f"width DIM={DIM}') END"
-    )
-    base = vectors.select(
-        F.col(id_col).alias("id"),
-        F.expr(V.spark_scaled(checked)).alias("v"),
-        F.expr(V.spark_dot(V.spark_scaled(checked), V.spark_scaled(checked))).alias(
-            "n"
-        ),
-    )
-    return base.select(
-        "id",
-        "v",
-        "n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _sign_key(b, n_planes).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
+            if not len(pdf):
+                continue
+            m = np.stack(pdf[vec_col].map(lambda a: np.asarray(a, dtype="float64")))
+            if m.shape[1] != planes.shape[0]:
+                raise ValueError(
+                    f"_banded corpus contract violated: vector width "
+                    f"{m.shape[1]} != DIM {planes.shape[0]}"
+                )
+            # engine-exact round(x·SCALE) — see vectors.py::np_scaled
+            v = m * scale
+            fv, cv = np.floor(v), np.ceil(v)
+            q = np.where(
+                v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)
+            ).astype("int64")
+            n = (q * q).sum(axis=1)
+            bits = (q @ planes) > 0
+            keys = np.zeros((len(q), n_bands), dtype="int64")
+            for b in range(n_bands):
+                for pl in range(n_planes):
+                    keys[:, b] = keys[:, b] * 2 + bits[:, b * n_planes + pl]
+            n_rows = len(q) * n_bands
+            yield pd.DataFrame(
+                {
+                    "id": np.repeat(pdf[id_col].to_numpy(), n_bands),
+                    "v": [row.tolist() for row in q for _ in range(n_bands)],
+                    "n": np.repeat(n, n_bands),
+                    "band": np.tile(np.arange(n_bands, dtype="int32"), len(q)),
+                    "key": keys.reshape(n_rows),
+                }
             )
-        ).alias("bk"),
-    ).select("id", "v", "n", "bk.band", "bk.key")
+
+    return vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        _batches, "id long, v array<bigint>, n bigint, band int, key bigint"
+    )
 
 
 def cosine_all_pairs(
@@ -730,51 +645,29 @@ def cosine_all_pairs(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
     n_blocks: int = 8,
 ) -> DataFrame:
     """EXACT all-pairs cosine ≥ threshold — the brute-force dedup
     baseline (q_dedup_embedding_cosine), decomposed for scale.
 
-    ``impl="arrow"`` (default) is the block-pair matmul form: vectors
-    are assigned to ``n_blocks`` deterministic blocks (id mod B); each
-    of the B·(B+1)/2 unordered block pairs becomes one cogroup task
-    that scores its two blocks as a single int64 matmul and emits only
-    the pairs over threshold.  Every unordered vector pair lands in
-    exactly one task (diagonal tasks mask id1 < id2), each vector is
-    shuffled B+1 times (the standard O(√tasks) replication of blocked
-    all-pairs), and no interpreted per-pair expression ever runs —
+    Block-pair matmul form: vectors are assigned to ``n_blocks``
+    deterministic blocks (id mod B); each of the B·(B+1)/2 unordered
+    block pairs becomes one cogroup task that scores its two blocks as
+    a single int64 matmul and emits only the pairs over threshold.
+    Every unordered vector pair lands in exactly one task (diagonal
+    tasks mask id1 < id2), each vector is shuffled B+1 times (the
+    standard O(√tasks) replication of blocked all-pairs), and no
+    interpreted per-pair expression ever runs —
     measured ~13× faster than the join form at sf0.1.  Size ``n_blocks``
     so a block pair (~2·(n/B)·(d+1) int64s) fits an executor; the
     O(n²) scoring cost is the tier's documented contract (the LSH /
     SemDeDup tiers are the candidate-pruned scale path).  Measured at
     sf0.1: 37.9 s (join form) → 1.5 s warm.
 
-    ``impl="sql"`` is the pure built-in theta-join form; bit-identical
-    (pinned in tests/test_round6b_ops.py) and the shape the DuckDB
-    oracle mirrors.
+    The DuckDB oracle (the q_dedup_embedding_cosine catalog entry) is
+    the plain theta-join form.
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     base = _scaled(vectors, id_col, vec_col, "s")
-    if impl == "sql":
-        a = base.select(
-            F.col("s_id").alias("id1"),
-            F.col("s_v").alias("v1"),
-            F.col("s_n").alias("n1"),
-        )
-        b = base.select(
-            F.col("s_id").alias("id2"),
-            F.col("s_v").alias("v2"),
-            F.col("s_n").alias("n2"),
-        )
-        cos = F.expr(V.spark_cosine(V.spark_dot("v1", "v2"), "n1", "n2"))
-        return (
-            a.join(b, F.col("id1") < F.col("id2"))
-            .withColumn("cos_sim", cos)
-            .filter(F.col("cos_sim") >= threshold)
-            .select("id1", "id2", "cos_sim")
-        )
     B = n_blocks
     blocks = base.withColumn("blk", F.pmod(F.col("s_id"), F.lit(B)).cast("int"))
     side_a = blocks.withColumn(
@@ -832,7 +725,6 @@ def cosine_dup_pairs(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
     max_bucket: int | None = None,
     n_planes: int | None = None,
     n_bands: int = LSH_BANDS,
@@ -883,8 +775,7 @@ def cosine_dup_pairs(
         _warn_candidate_mass(n_rows, n_planes, n_bands)
     banded = track_persist(
         _banded(
-            vectors, id_col, vec_col, impl=impl,
-            n_planes=n_planes, n_bands=n_bands,
+            vectors, id_col, vec_col, n_planes=n_planes, n_bands=n_bands
         )
     )
     # Candidate generation emits BARE (id1, id2) — the earlier shape
@@ -951,7 +842,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     multi_probe: bool = True,
-    impl: str = "arrow",
     n_planes: int | None = None,
     n_bands: int = LSH_BANDS,
 ) -> DataFrame:
@@ -978,8 +868,7 @@ def lsh_topk(
         n_planes = derived_lsh_planes(corpus.count())
     c = track_persist(
         _banded(
-            corpus, id_col, vec_col, impl=impl,
-            n_planes=n_planes, n_bands=n_bands,
+            corpus, id_col, vec_col, n_planes=n_planes, n_bands=n_bands
         )
     ).select(
         F.col("id").alias("c_id"),
@@ -988,10 +877,7 @@ def lsh_topk(
         "band",
         "key",
     )
-    q = _banded(
-        queries, id_col, vec_col, impl=impl,
-        n_planes=n_planes, n_bands=n_bands,
-    )
+    q = _banded(queries, id_col, vec_col, n_planes=n_planes, n_bands=n_bands)
     if multi_probe:
         # key plus its one-bit-flip variants (XOR each plane's bit).
         variants = ", ".join(
@@ -1103,10 +989,10 @@ def nearest_cells_sql(
 ) -> DataFrame:
     """Assign each vector to its ``n`` nearest centroids (broadcast
     centroid join + exact integer cosine, ``(cos desc, cell)``
-    tie-break) — the shared cell-assignment leg of :func:`ivf_topk`'s
-    SQL impl and the streaming vector-index store
-    (:mod:`..streaming.incremental_vectors`).  ``side``'s first
-    column must be its id."""
+    tie-break) — the query-side cell assignment of the streaming
+    vector-index store (:mod:`..streaming.incremental_vectors`), the
+    expression form of :func:`_cells_arrow`.  ``side``'s first column
+    must be its id."""
     cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "cent_v"), ncol, "cent_n"))
     w = W.partitionBy(side.columns[0]).orderBy(F.desc("cell_cos"), "cell")
     return (
@@ -1128,7 +1014,6 @@ def ivf_topk(
     kmeans_iters: int = 0,
     n_assign: int = 2,
     prescaled: bool = False,
-    impl: str = "arrow",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN top-k: coarse quantize the corpus into cells, probe
@@ -1139,19 +1024,15 @@ def ivf_topk(
     norm-augmented MIPS path (:func:`mips_topk_ivf`), where the
     augmentation itself must happen in exact integer space.
 
-    ``impl="arrow"`` (default) runs the two dense hot loops — cell
-    assignment (|side|·n_cells cosines) and candidate scoring
-    (|cand| cosines) — as int64 numpy matmuls inside ``mapInPandas``,
-    the :func:`_banded` dual-impl pattern: the interpreted
-    ``zip_with``/``aggregate`` chain was the measured 85% of
-    q_knn_label_propagation_ann's 41 s at sf1.  The centroid table is
-    pulled to the driver for the kernel (k×(d+1) ints — the bounded
-    model-pull posture of kmeans/Bloom/z-order).  ``impl="sql"`` is
-    the pure built-in-expression form; both produce bit-identical
-    rows (int64 matmul ≡ exact HOF dot, same IEEE cosine expression,
-    ties broken by ascending cell via stable argsort over
-    cell-ordered columns ≡ ``row_number`` (cos desc, cell)) — pinned
-    in tests.
+    The two dense hot loops — cell assignment (|side|·n_cells cosines)
+    and candidate scoring (|cand| cosines) — run as int64 numpy
+    matmuls inside ``mapInPandas``: the interpreted
+    ``zip_with``/``aggregate`` chain they replaced was the measured 85%
+    of q_knn_label_propagation_ann's 41 s at sf1.  The centroid table
+    is pulled to the driver for the kernel (k×(d+1) ints — the bounded
+    model-pull posture of kmeans/Bloom/z-order).  Ties break by
+    ascending cell (stable argsort over cell-ordered columns), exactly
+    as the oracle's ``row_number`` (cos desc, cell) does.
 
     Seed centroids are deterministic (the ``n_cells`` corpus vectors
     with the smallest ids), optionally refined with ``kmeans_iters``
@@ -1168,13 +1049,10 @@ def ivf_topk(
     the index; each query probes n_probe cells → query cost ≈
     |Q| · n_probe · n_assign · (|C| / n_cells) instead of |Q| · |C|.
 
-    Caching contract: the centroid table is ``persist()``-ed for the
-    life of the returned plan (both cell-assignment legs read it).
-    Long-lived sessions issuing many calls should call
-    :func:`..functions.caching.release_operator_caches` after
-    materializing results — at cluster scale the
-    centroids/index would instead be written per corpus snapshot, like
-    the dedup signature table (:mod:`.signatures`).
+    The centroid table is computed once and collected (bounded:
+    n_cells×(d+1) ints); at cluster scale the centroids/index would
+    instead be written per corpus snapshot, like the dedup signature
+    table (:mod:`.signatures`).
     """
     def _prep(side: DataFrame, prefix: str) -> DataFrame:
         v = vec_col if prescaled else V.spark_scaled(vec_col)
@@ -1184,8 +1062,6 @@ def ivf_topk(
             F.expr(V.spark_dot(v, v)).alias(f"{prefix}_n"),
         )
 
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     scaled = _prep(corpus, "c")
     if centroids is not None:
         # pinned centroid snapshot (the serving posture: an index
@@ -1207,38 +1083,10 @@ def ivf_topk(
             cents = kmeans_refine(scaled, cents, iters=kmeans_iters)
     q_scaled = _prep(queries, "q")
 
-    if impl == "arrow":
-        rows = cents.orderBy("cell").collect()  # bounded: k×(d+1) ints
-        import numpy as np
-
-        cent_ids = np.array([r["cell"] for r in rows], dtype="int64")
-        cent_m = np.array([r["cent_v"] for r in rows], dtype="int64")
-        cent_n = np.array([r["cent_n"] for r in rows], dtype="int64")
-        corpus_cells = _cells_arrow(
-            scaled, "c", n_assign, cent_ids, cent_m, cent_n
-        )
-        query_cells = _cells_arrow(
-            q_scaled, "q", n_probe, cent_ids, cent_m, cent_n
-        )
-        pair_cos = _cell_topk_arrow(query_cells, corpus_cells, k)
-    else:
-        cents = track_persist(cents)
-        corpus_cells = nearest_cells_sql(
-            scaled, cents, "c_v", "c_n", n_assign
-        ).select("c_id", "c_v", "c_n", "cell")
-        query_cells = nearest_cells_sql(
-            q_scaled, cents, "q_v", "q_n", n_probe
-        ).select("q_id", "q_v", "q_n", "cell")
-        cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-        pair_cos = (
-            query_cells.join(corpus_cells, "cell")
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("cos_sim"),
-            )
-        )
+    cent_ids, cent_m, cent_n = centroid_model(cents)
+    corpus_cells = _cells_arrow(scaled, "c", n_assign, cent_ids, cent_m, cent_n)
+    query_cells = _cells_arrow(q_scaled, "q", n_probe, cent_ids, cent_m, cent_n)
+    pair_cos = _cell_topk_arrow(query_cells, corpus_cells, k)
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     return (
         pair_cos.dropDuplicates(["query_id", "neighbor_id"])
@@ -1248,18 +1096,32 @@ def ivf_topk(
     )
 
 
+def centroid_model(cents: DataFrame):
+    """(cell ids, centroid matrix, centroid norms) as int64 numpy
+    arrays, cell-ascending — the driver-side model the cell-assignment
+    kernels score against.  Bounded: n_cells×(d+1) ints."""
+    import numpy as np
+
+    rows = cents.orderBy("cell").collect()
+    return (
+        np.array([r["cell"] for r in rows], dtype="int64"),
+        np.array([r["cent_v"] for r in rows], dtype="int64"),
+        np.array([r["cent_n"] for r in rows], dtype="int64"),
+    )
+
+
 def _cells_arrow(
     side: DataFrame, prefix: str, n: int, cent_ids, cent_m, cent_n
 ) -> DataFrame:
     """(id, v, n, cell) rows for each vector's ``n`` nearest centroids,
     computed as one int64 matmul per Arrow batch.
 
-    Ties replay the SQL form's ``row_number() OVER (ORDER BY cos DESC,
-    cell)``: the centroid matrix arrives cell-ascending and the argsort
-    on -cos is STABLE, so equal cosines resolve to the lower cell.
-    int64 matmul is exact (|component| ≤ ~1e8 ⇒ per-pair sums ≪ 2⁶³),
-    and the cosine is the same single-divide IEEE expression as
-    ``spark_cosine`` — bit-identical across impls (pinned in tests).
+    Ties replay ``row_number() OVER (ORDER BY cos DESC, cell)`` (the
+    oracle's and :func:`nearest_cells_sql`'s order): the centroid
+    matrix arrives cell-ascending and the argsort on -cos is STABLE,
+    so equal cosines resolve to the lower cell.  int64 matmul is exact
+    (|component| ≤ ~1e8 ⇒ per-pair sums ≪ 2⁶³), and the cosine is the
+    same single-divide IEEE expression as ``spark_cosine``.
 
     Memory is bounded by processing each Arrow batch in ROW BLOCKS:
     the score matrix (and its full stable argsort, which materializes
@@ -1334,10 +1196,10 @@ def _cell_topk_arrow(
     candidates under the same total order, so the union of per-cell
     top-k lists (|Q|·n_probe·k rows instead of the full candidate
     fan-out) always contains it; the shared dropDuplicates + window
-    then reproduces the SQL impl's result bit-for-bit (pinned in
-    tests).  Per-cell matmul size is occupancy-bounded — auto-scaled
-    cell counts keep expected occupancy ≈ per·n_assign; a pathological
-    mega-cell degrades to one big (still vectorized) block.
+    then yields the exact global top-k.  Per-cell matmul size is
+    occupancy-bounded — auto-scaled cell counts keep expected
+    occupancy ≈ per·n_assign; a pathological mega-cell degrades to one
+    big (still vectorized) block.
     """
 
     def _score(left, right):
@@ -1391,7 +1253,7 @@ def _imi_split(cent_m, cent_n):
     arrays): the first ⌊√n_cells⌋ centroids (cell-ascending) are the
     SUPER-centroids, and every centroid is owned by its nearest super
     (same IEEE cosine, (cos desc, sid) tie-break via stable argsort —
-    the SQL impl's row_number order).  Returns (n_super,
+    the oracle's row_number order).  Returns (n_super,
     cells_by_super) where cells_by_super[s] is the ascending index
     list of cells owned by super s."""
     import numpy as np
@@ -1420,13 +1282,13 @@ def _imi_cells_arrow(
     Lempitsky 2012) that keeps index builds sub-n^1.5 when n_cells
     itself is √n.
 
-    Tie-breaks replay the SQL form exactly: supers rank by
+    Tie-breaks replay the oracle exactly: supers rank by
     (cos desc, sid) — stable argsort over the sid-ascending super
     matrix — and member cells by (cos desc, cell) — candidates
     concatenated then sorted to cell-ascending before the stable
     argsort.  Rows whose probed supers own no cells (possible only
-    with duplicate centroid vectors) emit nothing, matching the SQL
-    join.
+    with duplicate centroid vectors) emit nothing, matching the
+    oracle's join.
     """
     import numpy as np
 
@@ -1440,8 +1302,8 @@ def _imi_cells_arrow(
     # value (the _banded posture).
     #
     # Two wall-clock moves over the round-7 shape, both row-set
-    # preserving (the arrow≡sql parity pin is unchanged): (a) incoming
-    # Arrow batches BUFFER to ~64k rows before processing — with
+    # preserving: (a) incoming Arrow batches BUFFER to ~64k rows
+    # before processing — with
     # C(√cells, 2) probe signatures a 10k-row batch fragments into
     # hundreds of ~15-row matmuls and the Python loop dominates
     # (measured 2.1× over single-level probing at 400k queries,
@@ -1527,38 +1389,6 @@ def _imi_cells_arrow(
     )
 
 
-def _imi_cells_sql(
-    side: DataFrame,
-    supers: DataFrame,
-    c2s: DataFrame,
-    vcol: str,
-    ncol: str,
-    n: int,
-    n_sprobe: int,
-) -> DataFrame:
-    """SQL twin of :func:`_imi_cells_arrow`: broadcast super join →
-    per-vector top-``n_sprobe`` supers → broadcast member-cell join →
-    per-vector top-``n``.  ``side``'s first column is its id."""
-    id_col = side.columns[0]
-    s_cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "s_v"), ncol, "s_n"))
-    ws = W.partitionBy(id_col).orderBy(F.desc("s_cos"), "sid")
-    v2s = (
-        side.join(F.broadcast(supers), F.lit(True))
-        .withColumn("s_cos", s_cos)
-        .withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= n_sprobe)
-        .select(*side.columns, "sid")
-    )
-    c_cos = F.expr(V.spark_cosine(V.spark_dot(vcol, "cent_v"), ncol, "cent_n"))
-    wc = W.partitionBy(id_col).orderBy(F.desc("cell_cos"), "cell")
-    return (
-        v2s.join(F.broadcast(c2s), "sid")
-        .withColumn("cell_cos", c_cos)
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .filter(F.col("cell_rank") <= n)
-    )
-
-
 def ivf_topk_imi(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1569,7 +1399,6 @@ def ivf_topk_imi(
     n_sprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF ANN top-k with a TWO-LEVEL coarse quantizer (IMI-style,
     Babenko & Lempitsky 2012): the build-side answer to the one cost
@@ -1590,25 +1419,13 @@ def ivf_topk_imi(
 
     Everything downstream of assignment — per-cell cogrouped int64
     block matmul, dedup, global (cos desc, neighbor_id) window — is
-    shared with :func:`ivf_topk`, and both impls ('arrow' kernel /
-    'sql' composition) are bit-identical (pinned in tests).  Oracle:
+    shared with :func:`ivf_topk`.  Oracle:
     :func:`duck_ivf2_topk_sql` replays seed centroids, the super
     split, both assignment levels, probe sets, cosines, and
     tie-breaks in generated CTEs.
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
-
-    def _prep(side: DataFrame, prefix: str) -> DataFrame:
-        v = V.spark_scaled(vec_col)
-        return side.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.expr(v).alias(f"{prefix}_v"),
-            F.expr(V.spark_dot(v, v)).alias(f"{prefix}_n"),
-        )
-
-    scaled = _prep(corpus, "c")
-    q_scaled = _prep(queries, "q")
+    scaled = _scaled(corpus, id_col, vec_col, "c")
+    q_scaled = _scaled(queries, id_col, vec_col, "q")
     cents = (
         scaled.orderBy("c_id")
         .limit(n_cells)
@@ -1618,62 +1435,14 @@ def ivf_topk_imi(
             F.col("c_n").alias("cent_n"),
         )
     )
-    if impl == "arrow":
-        import numpy as np
-
-        rows = cents.orderBy("cell").collect()  # bounded: k×(d+1) ints
-        cent_ids = np.array([r["cell"] for r in rows], dtype="int64")
-        cent_m = np.array([r["cent_v"] for r in rows], dtype="int64")
-        cent_n = np.array([r["cent_n"] for r in rows], dtype="int64")
-        corpus_cells = _imi_cells_arrow(
-            scaled, "c", n_assign, n_sprobe, cent_ids, cent_m, cent_n
-        )
-        query_cells = _imi_cells_arrow(
-            q_scaled, "q", n_probe, n_sprobe, cent_ids, cent_m, cent_n
-        )
-        pair_cos = _cell_topk_arrow(query_cells, corpus_cells, k)
-    else:
-        import math
-
-        cents = track_persist(cents)
-        n_super = max(1, int(math.floor(math.sqrt(float(cents.count())))))
-        wsr = W.orderBy("cell")
-        supers = (
-            cents.withColumn("sr", F.row_number().over(wsr))
-            .filter(F.col("sr") <= n_super)
-            .select(
-                F.col("cell").alias("sid"),
-                F.col("cent_v").alias("s_v"),
-                F.col("cent_n").alias("s_n"),
-            )
-        )
-        cs_cos = F.expr(
-            V.spark_cosine(V.spark_dot("cent_v", "s_v"), "cent_n", "s_n")
-        )
-        wcs = W.partitionBy("cell").orderBy(F.desc("cs_cos"), "sid")
-        c2s = (
-            cents.join(F.broadcast(supers), F.lit(True))
-            .withColumn("cs_cos", cs_cos)
-            .withColumn("rk", F.row_number().over(wcs))
-            .filter(F.col("rk") == 1)
-            .select("cell", "cent_v", "cent_n", "sid")
-        )
-        corpus_cells = _imi_cells_sql(
-            scaled, supers, c2s, "c_v", "c_n", n_assign, n_sprobe
-        ).select("c_id", "c_v", "c_n", "cell")
-        query_cells = _imi_cells_sql(
-            q_scaled, supers, c2s, "q_v", "q_n", n_probe, n_sprobe
-        ).select("q_id", "q_v", "q_n", "cell")
-        cos = F.expr(V.spark_cosine(V.spark_dot("q_v", "c_v"), "q_n", "c_n"))
-        pair_cos = (
-            query_cells.join(corpus_cells, "cell")
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("cos_sim"),
-            )
-        )
+    cent_ids, cent_m, cent_n = centroid_model(cents)
+    corpus_cells = _imi_cells_arrow(
+        scaled, "c", n_assign, n_sprobe, cent_ids, cent_m, cent_n
+    )
+    query_cells = _imi_cells_arrow(
+        q_scaled, "q", n_probe, n_sprobe, cent_ids, cent_m, cent_n
+    )
+    pair_cos = _cell_topk_arrow(query_cells, corpus_cells, k)
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     return (
         pair_cos.dropDuplicates(["query_id", "neighbor_id"])
@@ -1789,7 +1558,6 @@ def mips_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exact maximum-inner-product top-k per query (self excluded).
 
@@ -1798,9 +1566,9 @@ def mips_topk(
     cosine ANN tier cannot serve them unmodified.  This is the exact
     MIPS baseline: one corpus pass, int64 dot products
     (engine-exact), window top-k with (ip desc, neighbor) tiebreak.
-    Cost |Q|·|C| dots, zero corpus shuffle.  ``impl``: the
-    :func:`brute_force_topk` dual-impl contract ('arrow' batch
-    matmul + local top-k, 'sql' broadcast join; bit-identical).
+    Cost |Q|·|C| dots, zero corpus shuffle: the
+    :func:`brute_force_topk` kernel (batch matmul + local top-k) with
+    the inner-product metric.
 
     Scale path (Bachrach et al., RecSys 2014): append
     ``sqrt(M² − ‖x‖²)`` to each corpus vector and 0 to each query —
@@ -1811,25 +1579,10 @@ def mips_topk(
     dot/SCALE² — the true float inner product up to the deterministic
     quantization.
     """
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
     q = _scaled(queries, id_col, vec_col, "q")
     c = _scaled(corpus, id_col, vec_col, "c")
     w = W.partitionBy("query_id").orderBy(F.desc("ip"), "neighbor_id")
-    if impl == "arrow":
-        pairs = _bounded_q_topk_arrow(q, c, k, metric="ip")
-    else:
-        ip = F.expr(V.spark_dot("q_v", "c_v")).cast("double") / F.lit(
-            float(V.SCALE) * float(V.SCALE)
-        )
-        pairs = (
-            c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-            .select(
-                F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                ip.alias("ip"),
-            )
-        )
+    pairs = _bounded_q_topk_arrow(q, c, k, metric="ip")
     return (
         pairs.withColumn("rn", F.row_number().over(w).cast("int"))
         .filter(F.col("rn") <= k)

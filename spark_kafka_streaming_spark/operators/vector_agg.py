@@ -23,9 +23,7 @@ from pyspark.sql import functions as F
 from ..functions import vectors as V
 
 
-def gram_matrix(
-    df: DataFrame, vec_col: str = "embedding", impl: str = "arrow"
-) -> DataFrame:
+def gram_matrix(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Corpus Gram matrix ``G[i,j] = Σ_rows x_i·x_j`` (upper triangle).
 
     The reduce step of distributed PCA / covariance estimation: the
@@ -34,78 +32,50 @@ def gram_matrix(
     driver over d² numbers while the corpus-sized work stays
     distributed.
 
-    Two implementations, identical results (both integer-scaled via
-    :mod:`..functions.vectors`, both summed in DECIMAL(38,0) — exact
-    and associative at any corpus size, bit-identical across engines
-    and partitionings):
+    Arrow-batched ``mapInPandas`` kernel: per batch, one numpy int64
+    ``Qᵀ·Q`` over the integer-scaled vectors (:mod:`..functions.vectors`)
+    emits d²/2 *partial* rows, so the shuffle carries d²/2 rows per
+    batch and the Python boundary moves whole Arrow batches, never
+    rows — a dense numeric kernel 10× faster than interpreted
+    higher-order expressions (0.3 s vs 3 s at sf0.1).  Rounding
+    replicates Spark/DuckDB half-away-from-zero (``trunc(x ± 0.5)``),
+    not numpy's half-even ``rint``.  Partials sum in DECIMAL(38,0) —
+    exact and associative at any corpus size, bit-identical across
+    engines and partitionings.
 
-    * ``impl="arrow"`` (default): Arrow-batched ``mapInPandas`` kernel
-      — per batch, one numpy int64 ``Qᵀ·Q`` emits d²/2 *partial* rows,
-      so the shuffle carries d²/2 rows per batch and the Python
-      boundary moves whole Arrow batches, never rows.  This is the
-      legitimate pandas-UDF case: a dense numeric kernel 10× faster
-      than interpreted higher-order expressions (0.3 s vs 3 s at
-      sf0.1).  Rounding replicates Spark/DuckDB half-away-from-zero
-      (``trunc(x ± 0.5)``), not numpy's half-even ``rint``.
-    * ``impl="sql"``: pure built-in expressions — each row expands
-      map-side into its d(d+1)/2 upper-triangle products via one
-      nested ``transform``; no self-join, no UDF, runs on any Spark
-      without Arrow.  Same single map-side-combinable ``groupBy``.
-
-    Neither shape joins or re-scans: an explode+self-join would
+    The plan never joins or re-scans: an explode+self-join would
     shuffle the exploded corpus twice, which is the plan that dies at
     100 TB.
     """
-    if impl == "arrow":
-        scale = V.SCALE
+    scale = V.SCALE
 
-        # NOTE: the kernel closure must be SELF-CONTAINED — it is
-        # pickled to executor python workers that may not have this
-        # package on sys.path (the verification driver launches from an
-        # arbitrary cwd).  Module references (V.np_scaled, …) would be
-        # pickled by name and fail to import there; captured scalars
-        # and locally-defined code pickle by value.
-        def _batches(it):
-            import numpy as np
-            import pandas as pd
+    # NOTE: the kernel closure must be SELF-CONTAINED — it is
+    # pickled to executor python workers that may not have this
+    # package on sys.path (the verification driver launches from an
+    # arbitrary cwd).  Module references (V.np_scaled, …) would be
+    # pickled by name and fail to import there; captured scalars
+    # and locally-defined code pickle by value.
+    def _batches(it):
+        import numpy as np
+        import pandas as pd
 
-            for pdf in it:
-                col = pdf[vec_col].dropna()
-                if not len(col):
-                    continue
-                m = np.stack(col.map(lambda a: np.asarray(a, dtype="float64")))
-                # engine-exact round(x·SCALE): half-away-from-zero on
-                # the exact double (see functions/vectors.py::np_scaled)
-                v = m * scale
-                fv, cv = np.floor(v), np.ceil(v)
-                q = np.where(
-                    v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)
-                ).astype("int64")
-                g = q.T @ q  # exact: |p| ≤ (0.5·SCALE)² ≪ 2⁶³/batch_rows
-                iu = np.triu_indices(g.shape[0])
-                yield pd.DataFrame(
-                    {"i": iu[0] + 1, "j": iu[1] + 1, "p": g[iu]}
-                )
+        for pdf in it:
+            col = pdf[vec_col].dropna()
+            if not len(col):
+                continue
+            m = np.stack(col.map(lambda a: np.asarray(a, dtype="float64")))
+            # engine-exact round(x·SCALE): half-away-from-zero on
+            # the exact double (see functions/vectors.py::np_scaled)
+            v = m * scale
+            fv, cv = np.floor(v), np.ceil(v)
+            q = np.where(
+                v >= 0, fv + (v - fv >= 0.5), cv - (cv - v >= 0.5)
+            ).astype("int64")
+            g = q.T @ q  # exact: |p| ≤ (0.5·SCALE)² ≪ 2⁶³/batch_rows
+            iu = np.triu_indices(g.shape[0])
+            yield pd.DataFrame({"i": iu[0] + 1, "j": iu[1] + 1, "p": g[iu]})
 
-        parts = df.select(vec_col).mapInPandas(_batches, "i long, j long, p long")
-    elif impl == "sql":
-        d_q = V.spark_scaled(vec_col)
-        pairs = (
-            "flatten(transform(sequence(1, size(_q)), i -> "
-            "transform(sequence(i, size(_q)), j -> "
-            "struct(i AS i, j AS j, element_at(_q, i) * element_at(_q, j) AS p))))"
-        )
-        parts = (
-            df.select(F.expr(d_q).alias("_q"))
-            .select(F.explode(F.expr(pairs)).alias("e"))
-            .select(
-                F.col("e.i").cast("bigint").alias("i"),
-                F.col("e.j").cast("bigint").alias("j"),
-                "e.p",
-            )
-        )
-    else:
-        raise ValueError(f"unknown impl: {impl!r} (want 'arrow' or 'sql')")
+    parts = df.select(vec_col).mapInPandas(_batches, "i long, j long, p long")
     # Sum in DECIMAL(38,0) (exact, associative), return BIGINT: the
     # catalog design rule (queries/registry.py) is that no query returns
     # a raw wide decimal — engines serialize decimals differently even

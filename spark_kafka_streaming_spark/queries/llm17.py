@@ -50,8 +50,8 @@ def _imi_oracle() -> str:
     "IVF machinery (per-cell cogrouped int64 matmul, global rank). "
     "Deterministic; the oracle replays the super split (derived from "
     "the centroid COUNT in SQL), ownership, both assignment levels, "
-    "and all tie-breaks in generated CTEs; recall vs brute force and "
-    "arrow≡sql impl parity are pinned in tests.",
+    "and all tie-breaks in generated CTEs; recall vs brute force is "
+    "pinned in tests.",
     tags=("llm", "similarity", "ivf", "imi"),
 )
 def q_similarity_ann_imi(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -75,6 +75,9 @@ from ..functions import texthash as TH
 #: would be sized so one bucket ≈ a few hundred MB of index.
 N_KEY_BUCKETS = 64
 
+#: Above this many dup ids per micro-batch the accept filter anti-joins
+#: the dup set instead of inlining it as an IN list.
+DUP_IDS_INLINE_MAX = 10_000
 
 
 def signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -398,28 +401,34 @@ class IncrementalDeduper:
         )
         intra_dups = self._verify(intra)
 
-        dups = intra_dups if dup_vs_store is None else dup_vs_store.union(
-            intra_dups
-        ).distinct()
+        dups = (
+            intra_dups if dup_vs_store is None
+            else dup_vs_store.union(intra_dups).distinct()
+        ).persist()
         # Fold the dup-id set to the driver: it is bounded by the
         # micro-batch (every dup id IS a batch doc id), so below the
         # literal bound the three downstream writes filter on an IN
         # list instead of each carrying a join against the whole
         # probe/verify subtree — one dup computation, three small
         # write plans (driver analysis per trigger was the wall after
-        # the cache fixes).  A skew-hot batch past the bound keeps the
-        # join form; accept decisions are identical either way.
-        dup_rows = dups.collect()
-        if len(dup_rows) <= 10_000:
+        # the cache fixes).  The probe fetches at most one row past the
+        # bound; a skew-hot batch past it anti-joins the persisted dup
+        # set instead.  A NULL id is never a dup (the probe and intra
+        # joins compare ids with NULL-rejecting predicates), so both
+        # forms keep NULL-id docs: accept decisions are identical.
+        dup_rows = dups.limit(DUP_IDS_INLINE_MAX + 1).collect()
+        if len(dup_rows) <= DUP_IDS_INLINE_MAX:
             dup_ids = [r[0] for r in dup_rows]
-            keep = ~F.col(id_c).isin(dup_ids) if dup_ids else F.lit(True)
+            keep = (
+                F.col(id_c).isNull() | ~F.col(id_c).isin(dup_ids)
+                if dup_ids
+                else F.lit(True)
+            )
             accepted = batch.filter(keep)
             accepted_sigs = sigs.filter(keep)
             accepted_keys = keys.filter(keep)
         else:
-            dup_df = F.broadcast(
-                spark.createDataFrame(dup_rows, dups.schema)
-            )
+            dup_df = F.broadcast(dups)
             accepted = batch.join(dup_df, id_c, "left_anti")
             accepted_sigs = sigs.join(dup_df, id_c, "left_anti")
             accepted_keys = keys.join(dup_df, id_c, "left_anti")
@@ -469,6 +478,7 @@ class IncrementalDeduper:
                 .partitionBy("kb", "batch")
                 .parquet(self.keys_path)
             )
+        dups.unpersist()
         sigs.unpersist()
         keys.unpersist()
         if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:

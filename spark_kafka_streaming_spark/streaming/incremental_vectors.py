@@ -53,7 +53,12 @@ from pyspark.sql import Window as W
 from .fold import compact_tiered, guard_batch_id, read_store
 from .swap import recover_swap, swap_lock
 from ..functions import vectors as V
-from ..operators.similarity import _cells_arrow, _scaled, nearest_cells_sql
+from ..operators.similarity import (
+    _cells_arrow,
+    _scaled,
+    centroid_model,
+    nearest_cells_sql,
+)
 
 
 class IncrementalVectorIndexer:
@@ -119,18 +124,12 @@ class IncrementalVectorIndexer:
         # — measured live at the fourth decade as the trigger wall
         # (20k vectors × 1,414 cells = 28M interpreted dots, minutes
         # per trigger on the micro-batch's 2 input partitions).  The
-        # kernel is bit-identical to nearest_cells_sql (the ivf_topk
-        # dual-impl pin), and the centroid pull is the bounded
+        # kernel assigns the same cells as the nearest_cells_sql form
+        # topk() probes with (pinned by the store-served == batch
+        # ivf_topk test), and the centroid pull is the bounded
         # k×(d+1)-int model-pull posture ivf_topk already uses.
         if self._cent_model is None:
-            rows = cents.orderBy("cell").collect()
-            import numpy as np
-
-            self._cent_model = (
-                np.array([r["cell"] for r in rows], dtype="int64"),
-                np.array([r["cent_v"] for r in rows], dtype="int64"),
-                np.array([r["cent_n"] for r in rows], dtype="int64"),
-            )
+            self._cent_model = centroid_model(cents)
         cent_ids, cent_m, cent_n = self._cent_model
         assigned = _cells_arrow(
             scaled, "c", self.n_assign, cent_ids, cent_m, cent_n

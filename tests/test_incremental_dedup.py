@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -178,3 +179,33 @@ def test_compaction_preserves_store_and_dedups(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(accepted).select("doc_id").collect()
     )
     assert got == [1, 3, 5]
+
+
+@pytest.mark.parametrize("inline_max", [10_000, 0], ids=["in_list", "anti_join"])
+def test_null_id_doc_accepted_with_or_without_dups(
+    spark, tmp_path, monkeypatch, inline_max
+):
+    """A NULL-id doc is never anyone's near-dup, so its accept decision
+    must not depend on whether its batch also holds a dup pair — under
+    both forms of the dup filter (inline IN list, and the anti-join a
+    batch past the inline bound takes)."""
+    from spark_kafka_streaming_spark.streaming import incremental_dedup
+
+    monkeypatch.setattr(incremental_dedup, "DUP_IDS_INLINE_MAX", inline_max)
+    fresh = "fresh unseen words about embeddings and lsh bands"
+    batches = {
+        "no_dups": [(None, OTHER), (1, BASE), (3, fresh)],
+        "planted_pair": [(None, OTHER), (1, BASE), (2, NEAR)],
+    }
+    for name, rows in batches.items():
+        accepted = str(tmp_path / name / "accepted")
+        dedup = IncrementalDeduper(
+            str(tmp_path / name / "sigstore"), accepted, jaccard_threshold=0.5
+        )
+        dedup(spark.createDataFrame(rows, DOC_SCHEMA), 0)
+        got = {
+            r.doc_id
+            for r in spark.read.parquet(accepted).select("doc_id").collect()
+        }
+        want = {None, 1, 3} if name == "no_dups" else {None, 1}
+        assert got == want, name

@@ -63,38 +63,45 @@ def test_gram_matrix_upper_triangle_only(spark):
 
 
 def test_gram_matrix_plan_has_no_join(spark):
-    """The 100 TB shape: map-side pair expansion + one combinable
-    aggregate — any join/cartesian in the plan is a regression (both
-    the Arrow kernel and the pure-SQL fallback)."""
+    """The 100 TB shape: map-side partial Gram kernel + one combinable
+    aggregate — any join/cartesian in the plan is a regression."""
     df = spark.createDataFrame(
         [(1, [0.1, 0.2])], "vec_id long, embedding array<float>"
     )
-    for impl in ("arrow", "sql"):
-        plan = (
-            gram_matrix(df, impl=impl)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Join" not in plan and "Cartesian" not in plan, impl
-        assert "HashAggregate" in plan, impl
+    plan = gram_matrix(df)._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Cartesian" not in plan
+    assert "HashAggregate" in plan
 
 
-def test_gram_matrix_arrow_equals_sql(spark):
-    """The numpy kernel and the built-in-expression fallback are the
-    same operator: identical integer-scaled results, negatives and
-    rounding included."""
+def test_gram_matrix_matches_duckdb_oracle(spark, tmp_path):
+    """The numpy kernel equals its DuckDB oracle twin over the same
+    parquet file: identical integer-scaled sums, negatives and
+    half-away-from-zero rounding included, across more rows than one
+    kernel batch chunk."""
+    import duckdb
     import numpy as np
 
+    from spark_kafka_streaming_spark.operators.vector_agg import (
+        duck_gram_matrix_sql,
+    )
+
     rng = np.random.RandomState(3)
-    data = (rng.randn(257, 5) * 0.3).astype("float32")  # >1 Arrow batch row-chunk
-    df = spark.createDataFrame(
+    data = (rng.randn(257, 5) * 0.3).astype("float32")
+    path = str(tmp_path / "vecs")
+    spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(data)],
         "vec_id long, embedding array<float>",
+    ).write.parquet(path)
+    got = sorted(
+        (r.i, r.j, r.gram) for r in gram_matrix(spark.read.parquet(path)).collect()
     )
-    a = sorted((r.i, r.j, int(r.gram)) for r in gram_matrix(df, impl="arrow").collect())
-    b = sorted((r.i, r.j, int(r.gram)) for r in gram_matrix(df, impl="sql").collect())
-    assert a == b
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW vecs AS SELECT * FROM read_parquet('{path}/*.parquet')"
+        )
+        want = sorted(con.execute(duck_gram_matrix_sql("vecs")).fetchall())
+    assert len(got) == 5 * 6 // 2
+    assert got == want
 
 
 def test_quantize_int8_bounds_and_scale(spark, sf_dir):

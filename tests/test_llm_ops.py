@@ -263,72 +263,3 @@ def test_connected_components_chain_clusters(spark):
         (1, 1, True), (2, 1, False), (3, 1, False),
         (5, 5, True), (7, 7, True), (9, 7, False),
     }
-
-
-def test_lsh_banding_arrow_equals_sql(spark, sf_dir):
-    """The numpy banding kernel and the built-in-expression form are
-    the same operator: identical (id, band, key, n) and scaled vectors
-    for every row — signs, rounding, and packing included."""
-    from spark_kafka_streaming_spark.operators.similarity import _banded
-    from spark_kafka_streaming_spark.sources.batch import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = {
-        (r.id, r.band): (r.key, r.n, tuple(r.v))
-        for r in _banded(emb, "vec_id", "embedding", impl="arrow").collect()
-    }
-    b = {
-        (r.id, r.band): (r.key, r.n, tuple(r.v))
-        for r in _banded(emb, "vec_id", "embedding", impl="sql").collect()
-    }
-    assert a == b and len(a) > 0
-
-
-def test_lsh_banding_parity_at_deep_geometry(spark, sf_dir):
-    """The arrow/sql parity holds at a NON-default LSH geometry too —
-    the parameterization (n_planes, n_bands) must drive the same plane
-    indices, bit packing, and band fan-out in both impls (12×16 is the
-    measured dense-corpus configuration, SCALE.md)."""
-    from spark_kafka_streaming_spark.operators.similarity import _banded
-    from spark_kafka_streaming_spark.sources.batch import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(60)
-    kw = dict(n_planes=12, n_bands=16)
-    a = {
-        (r.id, r.band): (r.key, r.n)
-        for r in _banded(emb, "vec_id", "embedding", impl="arrow", **kw).collect()
-    }
-    b = {
-        (r.id, r.band): (r.key, r.n)
-        for r in _banded(emb, "vec_id", "embedding", impl="sql", **kw).collect()
-    }
-    assert a == b and len(a) == 60 * 16
-
-
-def test_signature_frame_arrow_equals_sql(spark, sf_dir):
-    """The Arrow signature kernel and the HOF-expression form are the
-    same derivation bit-for-bit: identical hs sequences (first-
-    occurrence order), MinHash signatures, SimHash values, and null
-    conventions — the property that lets the kernel feed every
-    oracle-checked dedup query."""
-    from spark_kafka_streaming_spark.operators.signatures import signature_frame
-    from spark_kafka_streaming_spark.sources.batch import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    # add edge rows: null text, empty, single token, repeated shingles
-    extra = spark.createDataFrame(
-        [(90001, None), (90002, ""), (90003, "one"), (90004, "a b c a b c a b c")],
-        "doc_id long, text string",
-    )
-    allx = docs.select("doc_id", "text").unionByName(extra)
-    a = {
-        r.doc_id: (r.hs, r.sig, r.sim)
-        for r in signature_frame(allx, impl="arrow").collect()
-    }
-    b = {
-        r.doc_id: (r.hs, r.sig, r.sim)
-        for r in signature_frame(allx, impl="sql").collect()
-    }
-    assert len(a) == len(b) and a.keys() == b.keys()
-    for k in a:
-        assert a[k] == b[k], f"doc {k}: {a[k]} != {b[k]}"

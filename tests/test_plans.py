@@ -50,18 +50,13 @@ def test_sort_limit_plans_take_ordered(spark, sf_dir):
 def test_similarity_corpus_not_shuffled(spark, sf_dir):
     df = REGISTRY["q_similarity_topk_bruteforce"].builder(spark, sf_dir)
     plan = _plan(df)
-    if "MapInPandas" in plan:
-        # impl='arrow': the corpus streams through the batch-matmul
-        # kernel straight off the scan — everything below the
-        # MapInPandas node (its subtree, printed after it) must be
-        # shuffle-free; the only Exchange allowed is the tiny
-        # |Q|·k-row candidate window above it.
-        below = plan.split("MapInPandas", 1)[1]
-        assert "Exchange" not in below, "corpus shuffled before scoring"
-    else:
-        assert (
-            "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-        ), "query side must broadcast; corpus must stream"
+    # The corpus streams through the batch-matmul kernel straight off
+    # the scan — everything below the MapInPandas node (its subtree,
+    # printed after it) must be shuffle-free; the only Exchange allowed
+    # is the tiny |Q|·k-row candidate window above it.
+    assert "MapInPandas" in plan
+    below = plan.split("MapInPandas", 1)[1]
+    assert "Exchange" not in below, "corpus shuffled before scoring"
 
 
 def test_salted_broadcast_join_matches_plain(spark, sf_dir):

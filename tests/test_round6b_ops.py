@@ -184,24 +184,6 @@ def test_random_projection_matches_numpy(spark, sf_dir):
 # ----------------------------------------- blocked all-pairs cosine
 
 
-def test_cosine_all_pairs_arrow_equals_sql(spark, sf_dir):
-    from spark_kafka_streaming_spark.operators.similarity import (
-        cosine_all_pairs,
-    )
-    from spark_kafka_streaming_spark.sources.batch import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    want = sorted(
-        tuple(r) for r in cosine_all_pairs(emb, 0.45, impl="sql").collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in cosine_all_pairs(emb, 0.45, impl="arrow", n_blocks=5).collect()
-    )
-    assert len(want) > 0
-    assert got == want  # bit-identical incl. cos_sim doubles
-
-
 def test_cosine_all_pairs_block_count_invariant(spark, sf_dir):
     from spark_kafka_streaming_spark.operators.similarity import (
         cosine_all_pairs,

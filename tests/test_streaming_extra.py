@@ -706,7 +706,7 @@ def test_incremental_vector_index_equals_batch(spark, sf_dir, tmp_path):
     fifth member): the foreachBatch-maintained cell-assigned vector
     store, served via probe-and-score, must reproduce the batch
     ivf_topk over everything ingested bit-for-bit — same pinned
-    centroid snapshot, both impls, and again after compaction."""
+    centroid snapshot, and again after compaction."""
     import glob
     import shutil as _sh
 
@@ -758,22 +758,15 @@ def test_incremental_vector_index_equals_batch(spark, sf_dir, tmp_path):
     assert len(got) == 50
 
     cents = indexer.centroids(spark)
-    for impl in ("sql", "arrow"):
-        want = sorted(
-            map(
-                tuple,
-                ivf_topk(
-                    queries,
-                    emb,
-                    k=5,
-                    n_probe=3,
-                    n_assign=2,
-                    centroids=cents,
-                    impl=impl,
-                ).collect(),
-            )
+    want = sorted(
+        map(
+            tuple,
+            ivf_topk(
+                queries, emb, k=5, n_probe=3, n_assign=2, centroids=cents
+            ).collect(),
         )
-        assert got == want, f"store-served != batch ivf_topk ({impl})"
+    )
+    assert got == want, "store-served != batch ivf_topk"
 
     # the store really is incremental (per-micro-batch leaves under
     # each cell)…
